@@ -57,13 +57,15 @@ def isolate(spark) -> None:
     localCheckpoint blocks the heavy queries create are freed by the
     gc.collect() + System.gc() pair below (Python refs die -> JVM
     ContextCleaner unpersists) — that pair, not clearCache, is the
-    load-bearing part."""
+    load-bearing part. The caller drops its last DataFrame reference
+    first; gc.collect() then releases the py4j handles, so the JVM
+    collection that follows can find the blocks unreferenced."""
     spark.catalog.clearCache()
+    gc.collect()
     try:
         spark.sparkContext._jvm.System.gc()
     except Exception:
         pass
-    gc.collect()
 
 
 def main() -> None:
@@ -101,6 +103,7 @@ def main() -> None:
             with open(os.path.join(plan_dir,
                                    f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(capture_plan(df))
+            del df
             isolate(spark)
         if args.plan_only:
             continue
@@ -111,6 +114,7 @@ def main() -> None:
             df = fn(spark, sf_dir)
             df.write.format("noop").mode("overwrite").save()
             ts.append(round(time.perf_counter() - t0, 3))
+            del df
             isolate(spark)
         spark.sparkContext.setJobDescription(None)
         results[name] = min(ts)

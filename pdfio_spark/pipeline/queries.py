@@ -1551,18 +1551,25 @@ def _ivf_train_cells(t: DataFrame, k: int, iters: int,
     # round-trips per pass
     sum_sql = ("array(" + ",".join(
         f"sum(element_at(qe, {i + 1}))" for i in range(dim)) + ")")
-    for _ in range(iters):
+    for n_pass in range(1, iters + 1):
         sums = (t.select(_argmax_cell("qe", cents, qn_sql)
                          .alias("c_id"), "qe")
                 .groupBy("c_id")
                 .agg(F.expr(sum_sql).alias("new_emb"))
                 .collect())
-        # a NULL sum element (NULL/short qe at that position across
+        # a NULL sum element (a NULL qe element at that position across
         # the whole cell) keeps the PREVIOUS centroid — the crash-free
-        # degradation of the old join+coalesce formulation (r7 review)
+        # degradation of the old join+coalesce formulation — and says
+        # so; an emptied cell keeps it silently
         new = {int(r["c_id"]): [int(x) for x in r["new_emb"]]
                for r in sums
                if all(x is not None for x in r["new_emb"])}
+        if n_frozen := len(sums) - len(new):
+            import warnings
+            warnings.warn(
+                f"IVF Lloyd pass {n_pass}: {n_frozen} cell(s) froze at "
+                "their previous centroid — every member has a NULL qe "
+                "element at some position", stacklevel=2)
         cents = [(c, new.get(c, e)) for c, e in cents]
     return cents
 

@@ -3,47 +3,22 @@
     spark-submit --py-files pdfio_spark.zip pdfio_spark/pipeline/run.py \
         --input  <parquet/iceberg of (url, warc_ts, html, text, lang)> \
         --output <results dir/table> --metrics <metrics dir/table> \
-        [--resume] [--cpus N] \
-        [--mode pdf|html|wet|wat|dedup|sigaudit|filter|pii|urlfilter|
-                decontam|domaincap|linededup|substrdedup|semdedup|
-                mix|dedupref|urldedup]
+        [--resume] [--cpus N] [--mode MODE] [MODE's own flags]
 
---mode pdf (default) runs the full PDF parse stack; --mode html runs
-the web-page boilerplate strip (html_extract) over the same table
-shape; --mode wet ingests pre-extracted text (url, text — e.g. from
-sources.read_wet) and annotates the oracle-verified analytics set;
---mode wat (r6) ingests flattened crawl metadata (url, metadata map,
-nbytes — sources.read_wat) and promotes the selection paths (content
-type, server, HTTP status, link count, title) to typed columns;
---mode dedup (r6) runs the composed exact+near-dup keep-decision
-operator (job.dedup_decisions) over (url, text); --mode sigaudit
-(r6) runs the corpus-scale signature audit
-(job.validate_signatures_over) over (url, html) — trust anchors and
-CRL/OCSP revocation material come from --trust-pems/--crl-pems/
---ocsp-ders (driver-read, closure-shipped) or each executor's
-$PDFIO_SPARK_* env; --mode filter (r6) runs the Gopher/C4-style
-quality gate (job.quality_decisions) over (url, text) — keep
-decisions with per-rule reason tags, map-only; --mode semdedup (r6)
-runs SemDeDup (job.semdedup_decisions) over (url, embedding) —
-embedding-cluster semantic dedup, corpus-global like --mode dedup;
---mode mix (r6) runs the data-mixture sampling stage
-(job.mix_decisions) — per-key rates (registrable domain by default;
-key_col weights any corpus column, e.g. lang) with deterministic
-downsampling and epoch-style upsampling, map-only; --mode dedupref
-(r6) decides a NEW crawl against a FROZEN kept corpus
-(job.dedup_against — hash probe + the shared band kernel, doc-local
-given the reference); --mode urldedup (r6) collapses recrawls of the
-same resource by normalized url (job.urldedup_decisions,
-corpus-global). All modes share the
-resume/metrics/run_id-reconcile contract (dedup resume re-derives the
-corpus-global decisions and appends only unwritten rows — see
+Every job mode is one entry of `MODES` below: its operator, metrics,
+scan columns, whether its decisions are corpus-global, the opts it
+takes (and the CLI flags that feed them) and a one-line description.
+`--mode pdf` (the default) runs the full PDF parse stack. All modes
+share the resume/metrics/run_id-reconcile contract (corpus-global
+resume re-derives the decisions and appends only unwritten rows — see
 run_job).
 
 Input is the Common-Crawl-style table of the north rule (the binary
 `html` column carries PDF bytes). The job:
-  1. scans with column pruning (url, html only),
+  1. scans with column pruning (each mode reads only its columns),
   2. resumes by anti-joining urls already present in the output,
-  3. extracts via the split-path skew topology (job.extract_pdfs),
+  3. runs the mode's operator (pdf: the split-path skew topology of
+     job.extract_pdfs),
   4. appends results + per-partition lineage metrics.
 
 Idempotent: re-running with --resume after a crash processes only the
@@ -53,8 +28,217 @@ the append itself is atomic per snapshot).
 from __future__ import annotations
 
 import argparse
+import json
 import sys
 import time
+from dataclasses import dataclass
+from typing import Callable
+
+
+def _json_object(spec: str) -> dict:
+    opts = json.loads(spec)
+    if not isinstance(opts, dict):
+        raise ValueError(f"expected a JSON object, got {spec!r}")
+    return opts
+
+
+def _blobs(key: str) -> Callable[[str], dict]:
+    """os.pathsep-separated file paths, read on the driver and shipped
+    into task closures (works on a real cluster where executors lack
+    the driver's filesystem); an empty spec falls through to the
+    executor-side $PDFIO_SPARK_* env lookup."""
+    def read(spec: str) -> dict:
+        from ..pd.signature import read_pathsep_blobs
+        return {key: read_pathsep_blobs(spec)} if spec else {}
+    return read
+
+
+def _blocklist(path: str) -> dict:
+    """A newline-separated entry file read on the DRIVER (a UT1-style
+    list doesn't fit in argv)."""
+    with open(path) as f:
+        return {"blocked_domains": [ln.strip() for ln in f if ln.strip()
+                                    and not ln.strip().startswith("#")]}
+
+
+def _decontam_args(spark, opts: dict):
+    kw = dict(opts)
+    path = kw.pop("benchmark_path", None)
+    texts = kw.pop("benchmark_texts", None)
+    if (path is None) == (texts is None):
+        raise ValueError("decontam needs exactly one of "
+                         "benchmark_path / benchmark_texts")
+    bench = (spark.read.parquet(path).select("text")
+             if path is not None else texts)
+    return (bench,), kw
+
+
+def _dedupref_args(spark, opts: dict):
+    if ("reference_path" in opts) == ("index_path" in opts):
+        raise ValueError("mode='dedupref' needs opts with exactly one "
+                         "of reference_path (frozen kept corpus, hashed "
+                         "inline) / index_path (build_dedup_index "
+                         "output — the amortized daily path)")
+    ref = (spark.read.parquet(opts["reference_path"]).select("text")
+           if "reference_path" in opts else None)
+    return (ref,), {"index_path": opts.get("index_path")}
+
+
+def _mix_cols(opts: dict) -> tuple:
+    key = opts.get("key_col", "domain")
+    return ("url",) if key == "domain" else ("url", key)
+
+
+@dataclass(frozen=True)
+class Mode:
+    """One job mode.
+
+    `op` / `metrics` name functions of this package ("job.dedup_metrics")
+    and are imported only when the mode runs. `cols` is the scan
+    projection, or a function of the opts where the columns depend on
+    them. `keys` are the opts keys the mode accepts: () means it takes
+    no opts, None means the operator's own keyword parameters (so a new
+    threshold needs no second edit here). `prepare(spark, opts)` checks
+    the opts and returns the operator's extra (args, kwargs); by default
+    the opts pass through as keywords. `flags` are the CLI flags that
+    feed the opts, each with the reader that turns its value into opts
+    entries (later flags win)."""
+    op: str
+    metrics: str
+    doc: str
+    cols: tuple | Callable[[dict], tuple] = ("url", "html")
+    corpus_global: bool = False
+    keys: tuple | None = ()
+    prepare: Callable | None = None
+    flags: tuple = ()
+
+
+_TEXT = ("url", "text")
+
+# Order is the CLI's --mode choices order. A corpus-global mode's
+# decisions depend on EVERY other doc, so its resume re-derives over the
+# full input and appends only unwritten rows.
+MODES: dict[str, Mode] = {
+    "pdf": Mode("job.extract_pdfs", "job.extraction_metrics",
+                "full PDF parse stack over (url, html binary)"),
+    "html": Mode("html_extract.extract_html", "html_extract.html_metrics",
+                 "web-page boilerplate strip (DOM block scoring)"),
+    "wet": Mode("job.annotate_wet", "job.wet_metrics",
+                "oracled analytics annotation of pre-extracted text "
+                "(sources.read_wet)", _TEXT),
+    "wat": Mode("job.annotate_wat", "job.wat_metrics",
+                "typed columns from flattened crawl metadata "
+                "(sources.read_wat)", ("url", "metadata", "nbytes")),
+    "dedup": Mode("job.dedup_decisions", "job.dedup_metrics",
+                  "exact + near-dup keep decisions", _TEXT,
+                  corpus_global=True),
+    # trust anchors and CRL/OCSP material; omitted, each executor reads
+    # its $PDFIO_SPARK_* env. A typo'd key (say 'crls') must not audit
+    # silently WITHOUT revocation checking.
+    "sigaudit": Mode("job.validate_signatures_over", "job.sigaudit_metrics",
+                     "corpus-scale signature audit, one row per "
+                     "signature",
+                     keys=("trust_pems", "crl_blobs", "ocsp_ders"),
+                     flags=(("--trust-pems", _blobs("trust_pems")),
+                            ("--crl-pems", _blobs("crl_blobs")),
+                            ("--ocsp-ders", _blobs("ocsp_ders")))),
+    # e.g. --filter-opts '{"min_words": 10, "langs": ["en", "de"]}'.
+    # Defaults are tuned for real web text: a 100%-drop on a synthetic
+    # short-text corpus is faithful, not a bug.
+    "filter": Mode("job.quality_decisions", "job.filter_metrics",
+                   "Gopher/C4-style quality gate with per-rule reason "
+                   "tags", _TEXT, keys=None,
+                   flags=(("--filter-opts", _json_object),)),
+    "pii": Mode("job.pii_scrub_over", "job.pii_metrics",
+                "PII redaction with per-category counters", _TEXT),
+    # --blocked-domains entries override a blocked_domains opts key
+    "urlfilter": Mode("job.url_filter_decisions", "job.urlfilter_metrics",
+                      "URL gate before any byte of content is read",
+                      ("url",), keys=None,
+                      flags=(("--url-opts", _json_object),
+                             ("--blocked-domains", _blocklist))),
+    # e.g. --decontam-opts '{"benchmark_path": "/data/eval.parquet",
+    # "k": 13}'
+    "decontam": Mode("job.decontam_decisions", "job.decontam_metrics",
+                     "drop docs sharing a k-token span with an eval set",
+                     _TEXT, keys=("benchmark_path", "benchmark_texts",
+                                  "k", "min_hits"),
+                     prepare=_decontam_args,
+                     flags=(("--decontam-opts", _json_object),)),
+    # the token-budget variant weighs docs by their text
+    "domaincap": Mode("job.domain_cap_decisions", "job.domaincap_metrics",
+                      "cap docs (or tokens) per registrable domain",
+                      lambda o: (_TEXT if o.get("max_tokens_per_domain")
+                                 is not None else ("url",)),
+                      corpus_global=True,
+                      keys=("max_per_domain", "max_tokens_per_domain"),
+                      flags=(("--domaincap-opts", _json_object),)),
+    "linededup": Mode("job.linededup_decisions", "job.linededup_metrics",
+                      "C4 corpus-level line dedup", _TEXT,
+                      corpus_global=True),
+    "substrdedup": Mode("job.substrdedup_decisions",
+                        "job.substrdedup_metrics",
+                        "ExactSubstr repeated-span removal", _TEXT,
+                        corpus_global=True),
+    # e.g. --semdedup-opts '{"k": 1024, "tau": 0.95, "train_frac": 0.1}'
+    "semdedup": Mode("job.semdedup_decisions", "job.semdedup_metrics",
+                     "embedding-cluster semantic dedup over "
+                     "(url, embedding)", ("url", "embedding"),
+                     corpus_global=True,
+                     keys=("k", "iters", "tau", "train_frac", "nprobe"),
+                     flags=(("--semdedup-opts", _json_object),)),
+    # e.g. --mix-opts '{"weights": {"wikipedia.org": 3.0}}'; a
+    # non-domain key_col (say lang) must reach the scan (_mix_cols)
+    "mix": Mode("job.mix_decisions", "job.mix_metrics",
+                "per-key deterministic down/upsampling",
+                _mix_cols,
+                keys=("weights", "default_rate", "seed", "key_col"),
+                flags=(("--mix-opts", _json_object),)),
+    # e.g. --dedupref-opts '{"reference_path": "/data/kept_corpus"}'
+    "dedupref": Mode("job.dedup_against", "job.dedup_metrics",
+                     "dedup a new crawl against a frozen kept corpus",
+                     _TEXT, keys=("reference_path", "index_path"),
+                     prepare=_dedupref_args,
+                     flags=(("--dedupref-opts", _json_object),)),
+    "urldedup": Mode("job.urldedup_decisions", "job.urldedup_metrics",
+                     "collapse recrawls of one resource by normalized "
+                     "url", ("url",), corpus_global=True),
+}
+
+
+def _load(ref: str):
+    import importlib
+    mod, name = ref.rsplit(".", 1)
+    return getattr(importlib.import_module(f".{mod}", __package__), name)
+
+
+def _operator(spark, mode: str, opts: dict | None):
+    """MODES[mode] with `opts` checked: (extract_fn, metrics_fn, cols,
+    corpus_global). Runs BEFORE any column select: an unknown mode used
+    to surface as a misleading cannot-resolve-column AnalysisException
+    on WET-shaped tables."""
+    spec = MODES.get(mode)
+    if spec is None:
+        raise ValueError(f"unknown mode {mode!r} ({' | '.join(MODES)})")
+    op = _load(spec.op)
+    if spec.keys == () and opts is not None:
+        takers = [m for m, s in MODES.items() if s.keys != ()]
+        raise ValueError(f"mode={mode!r} takes no opts (opts are only "
+                         f"valid with mode in {takers})")
+    opts = dict(opts or {})
+    if spec.keys is None:
+        import inspect
+        valid = set(inspect.signature(op).parameters) - {"corpus"}
+    else:
+        valid = set(spec.keys)
+    if bad := set(opts) - valid:
+        raise ValueError(f"unknown opts keys {sorted(bad)} for "
+                         f"mode={mode!r} (valid: {sorted(valid)})")
+    args, kw = (spec.prepare(spark, opts) if spec.prepare
+                else ((), opts))
+    cols = spec.cols(opts) if callable(spec.cols) else spec.cols
+    return ((lambda c: op(c, *args, **kw)), _load(spec.metrics),
+            list(cols), spec.corpus_global)
 
 
 def make_cc_table(docs, classes=None):
@@ -75,252 +259,35 @@ def make_cc_table(docs, classes=None):
 def run_job(spark, input_path: str, output_path: str,
             metrics_path: str | None = None, resume: bool = False,
             mode: str = "pdf", run_id: str | None = None,
-            sig_material: dict | None = None,
-            filter_opts: dict | None = None,
-            url_opts: dict | None = None,
-            decontam_opts: dict | None = None,
-            domaincap_opts: dict | None = None,
-            semdedup_opts: dict | None = None,
-            mix_opts: dict | None = None,
-            dedupref_opts: dict | None = None) -> dict:
-    """mode='pdf' (default): full PDF parse stack. mode='html': the
-    web-page half — DOM block-scoring boilerplate strip over the same
-    (url, html binary) table shape, same resume/metrics contract.
+            opts: dict | None = None) -> dict:
+    """Run one `MODES` entry over `input_path`. `opts` are the mode's
+    options (see Mode.keys); a mode that takes none rejects any opts,
+    even {}.
 
     Every run stamps its output AND metrics rows with a `run_id`; on
     --resume, any run_id present in the output but absent from the
     metrics table (= a crash landed between the two appends) gets its
     metrics RECOMPUTED from the committed output rows and appended
     with reconciled=true — metrics completeness without re-extraction
-    (ADVICE r4; partition ids in reconciled rows reflect the resume
-    read, the lineage counts are exact)."""
+    (partition ids in reconciled rows reflect the resume read, the
+    lineage counts are exact)."""
     import uuid
     from pyspark.sql import functions as F
     from pyspark.sql.utils import AnalysisException
-    from .html_extract import extract_html, html_metrics
-    from .job import extract_pdfs, extraction_metrics
 
-    # validate the mode BEFORE any column select: an unknown mode used
-    # to surface as a misleading cannot-resolve-column AnalysisException
-    # on WET-shaped tables (r5 review)
-    if mode == "html":
-        extract_fn, metrics_fn = extract_html, html_metrics
-    elif mode == "pdf":
-        extract_fn, metrics_fn = extract_pdfs, extraction_metrics
-    elif mode == "wet":
-        from .job import annotate_wet, wet_metrics
-        extract_fn, metrics_fn = annotate_wet, wet_metrics
-    elif mode == "dedup":
-        from .job import dedup_decisions, dedup_metrics
-        extract_fn, metrics_fn = dedup_decisions, dedup_metrics
-    elif mode == "wat":
-        from .job import annotate_wat, wat_metrics
-        extract_fn, metrics_fn = annotate_wat, wat_metrics
-    elif mode == "filter":
-        import inspect
-        from .job import filter_metrics, quality_decisions
-        fo = filter_opts or {}
-        # fail fast on a typo'd threshold name: 'min_word' would
-        # otherwise silently run the Gopher defaults (the sig_material
-        # key lesson). Defaults are tuned for real web text — a real
-        # corpus run is EXPECTED to tune these (100%-drop on synthetic
-        # short-text corpora is faithful, not a bug)
-        valid = set(inspect.signature(quality_decisions).parameters)
-        bad = set(fo) - (valid - {"corpus"})
-        if bad:
-            raise ValueError(f"unknown filter_opts keys {sorted(bad)} "
-                             f"(valid: {sorted(valid - {'corpus'})})")
-
-        def extract_fn(c, _fo=fo):
-            return quality_decisions(c, **_fo)
-        metrics_fn = filter_metrics
-    elif mode == "pii":
-        from .job import pii_metrics, pii_scrub_over
-        extract_fn, metrics_fn = pii_scrub_over, pii_metrics
-    elif mode == "domaincap":
-        from .job import domain_cap_decisions, domaincap_metrics
-        co = domaincap_opts or {}
-        bad = set(co) - {"max_per_domain", "max_tokens_per_domain"}
-        if bad:
-            raise ValueError(f"unknown domaincap_opts keys "
-                             f"{sorted(bad)} (max_per_domain | "
-                             "max_tokens_per_domain)")
-
-        def extract_fn(c, _co=co):
-            return domain_cap_decisions(c, **_co)
-        metrics_fn = domaincap_metrics
-    elif mode == "decontam":
-        from .job import decontam_decisions, decontam_metrics
-        do = dict(decontam_opts or {})
-        bad = set(do) - {"benchmark_path", "benchmark_texts", "k",
-                         "min_hits"}
-        if bad:
-            raise ValueError(f"unknown decontam_opts keys "
-                             f"{sorted(bad)} (benchmark_path | "
-                             "benchmark_texts | k | min_hits)")
-        bench_path = do.pop("benchmark_path", None)
-        bench = do.pop("benchmark_texts", None)
-        if (bench_path is None) == (bench is None):
-            raise ValueError("decontam needs exactly one of "
-                             "benchmark_path / benchmark_texts")
-        if bench_path is not None:
-            bench = spark.read.parquet(bench_path).select("text")
-
-        def extract_fn(c, _b=bench, _do=do):
-            return decontam_decisions(c, _b, **_do)
-        metrics_fn = decontam_metrics
-    elif mode == "urlfilter":
-        import inspect
-        from .job import url_filter_decisions, urlfilter_metrics
-        uo = url_opts or {}
-        # fail fast on a typo'd option name (the filter_opts rule):
-        # 'blocked_domain' would otherwise silently gate NOTHING
-        valid = set(inspect.signature(url_filter_decisions).parameters)
-        bad = set(uo) - (valid - {"corpus"})
-        if bad:
-            raise ValueError(f"unknown url_opts keys {sorted(bad)} "
-                             f"(valid: {sorted(valid - {'corpus'})})")
-
-        def extract_fn(c, _uo=uo):
-            return url_filter_decisions(c, **_uo)
-        metrics_fn = urlfilter_metrics
-    elif mode == "dedupref":
-        from .job import dedup_against, dedup_metrics
-        ro = dedupref_opts or {}
-        bad = set(ro) - {"reference_path", "index_path"}
-        if bad:
-            raise ValueError(f"unknown dedupref_opts keys "
-                             f"{sorted(bad)} (reference_path | "
-                             "index_path)")
-        if ("reference_path" in ro) == ("index_path" in ro):
-            raise ValueError("mode='dedupref' needs dedupref_opts "
-                             "with exactly one of reference_path "
-                             "(frozen kept corpus, hashed inline) / "
-                             "index_path (build_dedup_index output — "
-                             "the amortized daily path)")
-        ref = (spark.read.parquet(ro["reference_path"]).select("text")
-               if "reference_path" in ro else None)
-
-        def extract_fn(c, _ref=ref, _ix=ro.get("index_path")):
-            return dedup_against(c, _ref, index_path=_ix)
-        metrics_fn = dedup_metrics
-    elif mode == "mix":
-        from .job import mix_decisions, mix_metrics
-        mo = mix_opts or {}
-        bad = set(mo) - {"weights", "default_rate", "seed", "key_col"}
-        if bad:
-            raise ValueError(f"unknown mix_opts keys {sorted(bad)} "
-                             "(weights | default_rate | seed | "
-                             "key_col)")
-
-        def extract_fn(c, _mo=mo):
-            return mix_decisions(c, **_mo)
-        metrics_fn = mix_metrics
-    elif mode == "semdedup":
-        from .job import semdedup_decisions, semdedup_metrics
-        so = semdedup_opts or {}
-        bad = set(so) - {"k", "iters", "tau", "train_frac", "nprobe"}
-        if bad:
-            raise ValueError(f"unknown semdedup_opts keys "
-                             f"{sorted(bad)} (k | iters | tau | "
-                             "train_frac | nprobe)")
-
-        def extract_fn(c, _so=so):
-            return semdedup_decisions(c, **_so)
-        metrics_fn = semdedup_metrics
-    elif mode == "urldedup":
-        from .job import urldedup_decisions, urldedup_metrics
-        extract_fn, metrics_fn = urldedup_decisions, urldedup_metrics
-    elif mode == "linededup":
-        from .job import linededup_decisions, linededup_metrics
-        extract_fn, metrics_fn = linededup_decisions, linededup_metrics
-    elif mode == "substrdedup":
-        from .job import substrdedup_decisions, substrdedup_metrics
-        extract_fn, metrics_fn = (substrdedup_decisions,
-                                  substrdedup_metrics)
-    elif mode == "sigaudit":
-        from .job import sigaudit_metrics, validate_signatures_over
-        sm = sig_material or {}
-        # fail fast on a typo'd key: a misspelled 'crl_blobs' would
-        # otherwise silently audit WITHOUT revocation checking (the
-        # append_updates style-typo lesson)
-        bad = set(sm) - {"trust_pems", "crl_blobs", "ocsp_ders"}
-        if bad:
-            raise ValueError(f"unknown sig_material keys {sorted(bad)} "
-                             "(trust_pems | crl_blobs | ocsp_ders)")
-
-        def extract_fn(c, _sm=sm):
-            return validate_signatures_over(
-                c, trust_pems=_sm.get("trust_pems"),
-                crl_blobs=_sm.get("crl_blobs"),
-                ocsp_ders=_sm.get("ocsp_ders"))
-        metrics_fn = sigaudit_metrics
-    else:
-        raise ValueError(f"unknown mode {mode!r} (pdf | html | wet | "
-                         "wat | dedup | sigaudit | filter | pii | "
-                         "urlfilter | decontam | domaincap | "
-                         "linededup | substrdedup | semdedup | mix | "
-                         "dedupref | urldedup)")
-    if sig_material is not None and mode != "sigaudit":
-        raise ValueError("sig_material is only valid with "
-                         "mode='sigaudit'")
-    if filter_opts is not None and mode != "filter":
-        raise ValueError("filter_opts is only valid with "
-                         "mode='filter'")
-    if url_opts is not None and mode != "urlfilter":
-        raise ValueError("url_opts is only valid with "
-                         "mode='urlfilter'")
-    if decontam_opts is not None and mode != "decontam":
-        raise ValueError("decontam_opts is only valid with "
-                         "mode='decontam'")
-    if domaincap_opts is not None and mode != "domaincap":
-        raise ValueError("domaincap_opts is only valid with "
-                         "mode='domaincap'")
-    if semdedup_opts is not None and mode != "semdedup":
-        raise ValueError("semdedup_opts is only valid with "
-                         "mode='semdedup'")
-    if mix_opts is not None and mode != "mix":
-        raise ValueError("mix_opts is only valid with mode='mix'")
-    if dedupref_opts is not None and mode != "dedupref":
-        raise ValueError("dedupref_opts is only valid with "
-                         "mode='dedupref'")
+    extract_fn, metrics_fn, cols, corpus_global = _operator(
+        spark, mode, opts)
 
     rid = run_id or uuid.uuid4().hex
     src = spark.read.parquet(input_path)
     # column pruning reaches the scan: each mode reads only its columns
-    cols = {"wet": ["url", "text"], "dedup": ["url", "text"],
-            "filter": ["url", "text"], "pii": ["url", "text"],
-            "urlfilter": ["url"], "decontam": ["url", "text"],
-            # the token-budget variant weighs docs by their text
-            "domaincap": (["url", "text"]
-                          if (domaincap_opts or {})
-                          .get("max_tokens_per_domain") is not None
-                          else ["url"]),
-            "linededup": ["url", "text"],
-            "substrdedup": ["url", "text"],
-            "semdedup": ["url", "embedding"],
-            # a non-domain mix key (e.g. lang) must reach the scan
-            "mix": (["url"]
-                    + ([k] if (k := (mix_opts or {})
-                               .get("key_col", "domain")) != "domain"
-                       else [])),
-            "dedupref": ["url", "text"],
-            "urldedup": ["url"],
-            "wat": ["url", "metadata", "nbytes"]}.get(mode,
-                                                      ["url", "html"])
-    # decisions in these modes depend on EVERY other doc: resume must
-    # re-derive over the full input, then append only unwritten rows
-    # domaincap's keep set depends on every other doc in a domain —
-    # corpus-global like the dedups
-    corpus_global = mode in ("dedup", "linededup", "substrdedup",
-                             "domaincap", "semdedup", "urldedup")
     corpus = src.select(*cols)
     # the resume contract keys on url, and a NULL key matches NOTHING
     # in the anti-join (SQL null equality) — a NULL-url row would be
     # reprocessed and its decision re-APPENDED on every resume no
     # matter what the operator writes (the operator-side coalesces
     # fix the OUTPUT row but sit on the wrong side of the anti-join).
-    # Normalize the key once here, for every mode (r6 review).
+    # Normalize the key once here, for every mode.
     corpus = corpus.withColumn("url",
                                F.coalesce(F.col("url"), F.lit("")))
 
@@ -329,23 +296,21 @@ def run_job(spark, input_path: str, output_path: str,
         try:
             # mergeSchema: a dir mixing pre-run_id part-files with
             # stamped ones must surface the run_id column regardless
-            # of which footer Spark samples (r5 review: a hidden
-            # column made EVERY run an "orphan" and double-counted
-            # lineage)
+            # of which footer Spark samples (a hidden column made
+            # EVERY run an "orphan" and double-counted lineage)
             prev = (spark.read.option("mergeSchema", True)
                     .parquet(output_path))
         except AnalysisException:
             pass  # no prior output -> fresh run
-    # the try covers ONLY the output read (ADVICE r5: the old block
-    # also swallowed AnalysisExceptions thrown by reconciliation —
-    # e.g. orphan rows written by a different --mode — and silently
-    # skipped it); resume/reconcile failures now surface
+    # the try covers ONLY the output read: an AnalysisException thrown
+    # by reconciliation (e.g. orphan rows written by a different
+    # --mode) must surface, not silently skip it
     if prev is not None:
         if not corpus_global:
             # join strategy left to Spark (job.resume_filter): `done`
             # is the UNBOUNDED set of all previously-written urls — a
             # forced broadcast OOMs exactly on the crash-recovery path
-            # it exists for (r4 review fix)
+            # it exists for
             from .job import resume_filter
             corpus = resume_filter(corpus, prev.select("url"))
         if metrics_path and "run_id" in prev.columns:
@@ -366,7 +331,7 @@ def run_job(spark, input_path: str, output_path: str,
         # DISPLACE already-written decisions (a hash-smaller doc
         # becomes the dedup winner / enters a full domain cap), and
         # written rows are immutable — audit and warn rather than
-        # silently violate the invariant (r6 review).
+        # silently violate the invariant.
         from .job import resume_filter
         # one checkpoint of the full re-derived set feeds both the
         # displacement audit and the anti-join (the decision plan
@@ -456,107 +421,31 @@ def main(argv=None) -> None:
     ap.add_argument("--metrics", default=None)
     ap.add_argument("--resume", action="store_true")
     ap.add_argument("--cpus", type=int, default=None)
-    ap.add_argument("--mode",
-                    choices=("pdf", "html", "wet", "wat", "dedup",
-                             "sigaudit", "filter", "pii", "urlfilter",
-                             "decontam", "domaincap", "linededup",
-                             "substrdedup", "semdedup", "mix",
-                             "dedupref", "urldedup"),
-                    default="pdf")
-    # sigaudit material: os.pathsep-separated file paths, read on the
-    # driver and shipped into task closures (works on a real cluster
-    # where executors lack the driver's filesystem); omit to fall
-    # through to the executor-side $PDFIO_SPARK_* env lookup
-    ap.add_argument("--trust-pems", default=None)
-    ap.add_argument("--crl-pems", default=None)
-    ap.add_argument("--ocsp-ders", default=None)
-    # --mode filter thresholds as a JSON object, e.g.
-    # --filter-opts '{"min_words": 10, "langs": ["en", "de"]}'
-    ap.add_argument("--filter-opts", default=None)
-    # --mode urlfilter options as a JSON object; --blocked-domains is
-    # a newline-separated entry file read on the DRIVER (a UT1-style
-    # list doesn't fit in argv) and merged into url_opts
-    ap.add_argument("--url-opts", default=None)
-    ap.add_argument("--blocked-domains", default=None)
-    # --mode decontam options, e.g. --decontam-opts
-    # '{"benchmark_path": "/data/eval.parquet", "k": 13}'
-    ap.add_argument("--decontam-opts", default=None)
-    # --mode domaincap options, e.g. --domaincap-opts
-    # '{"max_per_domain": 100000}'
-    ap.add_argument("--domaincap-opts", default=None)
-    # --mode semdedup options, e.g. --semdedup-opts
-    # '{"k": 1024, "tau": 0.95, "train_frac": 0.1}'
-    ap.add_argument("--semdedup-opts", default=None)
-    # --mode mix options, e.g. --mix-opts
-    # '{"weights": {"wikipedia.org": 3.0, "spam.net": 0.1}}'
-    ap.add_argument("--mix-opts", default=None)
-    # --mode dedupref options, e.g. --dedupref-opts
-    # '{"reference_path": "/data/kept_corpus"}'
-    ap.add_argument("--dedupref-opts", default=None)
+    ap.add_argument("--mode", choices=tuple(MODES), default="pdf")
+    for spec in MODES.values():
+        for flag, _ in spec.flags:
+            ap.add_argument(flag, default=None)
     args = ap.parse_args(argv)
 
-    filter_opts = None
-    if args.filter_opts is not None:
-        import json
-        filter_opts = json.loads(args.filter_opts)
-    url_opts = None
-    if args.url_opts is not None:
-        import json
-        url_opts = json.loads(args.url_opts)
-    decontam_opts = None
-    if args.decontam_opts is not None:
-        import json
-        decontam_opts = json.loads(args.decontam_opts)
-    domaincap_opts = None
-    if args.domaincap_opts is not None:
-        import json
-        domaincap_opts = json.loads(args.domaincap_opts)
-    semdedup_opts = None
-    if args.semdedup_opts is not None:
-        import json
-        semdedup_opts = json.loads(args.semdedup_opts)
-    mix_opts = None
-    if args.mix_opts is not None:
-        import json
-        mix_opts = json.loads(args.mix_opts)
-    dedupref_opts = None
-    if args.dedupref_opts is not None:
-        import json
-        dedupref_opts = json.loads(args.dedupref_opts)
-    if args.blocked_domains is not None:
-        with open(args.blocked_domains) as f:
-            doms = [ln.strip() for ln in f if ln.strip()
-                    and not ln.strip().startswith("#")]
-        url_opts = dict(url_opts or {}, blocked_domains=doms)
-
-    # build sig_material from the flags in EVERY mode: run_job's
-    # mode guard then rejects e.g. `--mode pdf --crl-pems x.pem`
-    # loudly instead of the flags being silently dropped — the exact
-    # silent-no-revocation failure the sig_material key check exists
-    # to prevent (r6 review x2)
-    from ..pd.signature import read_pathsep_blobs
-
-    def _read_all(spec):
-        return read_pathsep_blobs(spec) if spec else None
-
-    sig_material = {
-        k: v for k, v in
-        (("trust_pems", _read_all(args.trust_pems)),
-         ("crl_blobs", _read_all(args.crl_pems)),
-         ("ocsp_ders", _read_all(args.ocsp_ders))) if v is not None}
-    if not sig_material:
-        sig_material = None
+    # a per-mode flag under another --mode fails here, before any
+    # session starts: `--mode pdf --crl-pems x.pem` must never drop
+    # the revocation material silently
+    opts = None
+    for mode, spec in MODES.items():
+        for flag, read in spec.flags:
+            value = getattr(args, flag[2:].replace("-", "_"))
+            if value is None:
+                continue
+            if mode != args.mode:
+                raise ValueError(f"{flag} is only valid with "
+                                 f"--mode {mode}")
+            opts = {**(opts or {}), **read(value)}
 
     from .session import get_spark
     spark = get_spark(cpus=args.cpus, app="pdfio_spark_job")
     spark.sparkContext.setLogLevel("WARN")
     out = run_job(spark, args.input, args.output, args.metrics,
-                  args.resume, mode=args.mode,
-                  sig_material=sig_material, filter_opts=filter_opts,
-                  url_opts=url_opts, decontam_opts=decontam_opts,
-                  domaincap_opts=domaincap_opts,
-                  semdedup_opts=semdedup_opts, mix_opts=mix_opts,
-                  dedupref_opts=dedupref_opts)
+                  args.resume, mode=args.mode, opts=opts)
     print(out)
     spark.stop()
 

@@ -24,6 +24,33 @@ __all__ = ["stream_extract", "stream_metrics", "stream_dedup",
            "stream_line_dedup"]
 
 
+def _file_source(spark: SparkSession, schema: str, input_dir: str,
+                 max_files_per_trigger: int | None = 8):
+    """The twins' source: a parquet file stream of `schema` rows
+    arriving in `input_dir`, at most `max_files_per_trigger` new files
+    per micro-batch (None: every new file in one batch)."""
+    reader = spark.readStream.schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(input_dir)
+
+
+def _parquet_sink(df, output_dir: str, checkpoint_dir: str,
+                  partition_by: str | None = None):
+    """The twins' sink: append `df` to parquet under `output_dir`,
+    exactly-once via the checkpoint in `checkpoint_dir`, over every
+    file that has arrived (availableNow). Returns the started
+    StreamingQuery; restarting on the same checkpoint resumes."""
+    writer = df.writeStream.format("parquet")
+    if partition_by is not None:
+        writer = writer.partitionBy(partition_by)
+    return (writer.option("path", output_dir)
+            .option("checkpointLocation", checkpoint_dir)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start())
+
+
 def stream_dedup(spark: SparkSession, input_dir: str, checkpoint_dir: str,
                  output_dir: str, state_ttl_hours: int | None = None):
     """Custom stateful streaming operator via applyInPandasWithState:
@@ -42,9 +69,8 @@ def stream_dedup(spark: SparkSession, input_dir: str, checkpoint_dir: str,
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    src = (spark.readStream
-           .schema("url string, html binary, nbytes long")
-           .parquet(input_dir))
+    src = _file_source(spark, "url string, html binary, nbytes long",
+                       input_dir, max_files_per_trigger=None)
     ttl_ms = None if state_ttl_hours is None else \
         max(1, int(state_ttl_hours * 3600 * 1000))
 
@@ -81,13 +107,7 @@ def stream_dedup(spark: SparkSession, input_dir: str, checkpoint_dir: str,
         timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
                      if ttl_ms is not None
                      else GroupStateTimeout.NoTimeout)))
-    return (deduped.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return _parquet_sink(deduped, output_dir, checkpoint_dir)
 
 
 def stream_neardup(spark: SparkSession, input_dir: str,
@@ -115,9 +135,8 @@ def stream_neardup(spark: SparkSession, input_dir: str,
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
     from .queries import minhash_band_melt
 
-    src = (spark.readStream
-           .schema("url string, text string")
-           .parquet(input_dir))
+    src = _file_source(spark, "url string, text string", input_dir,
+                       max_files_per_trigger=None)
     melted = minhash_band_melt(src, id_col="url")
     words = F.split(F.lower(F.trim(F.coalesce("text", F.lit("")))), r"\s+")
     short = (src.filter(F.size(words) < 3)
@@ -160,13 +179,8 @@ def stream_neardup(spark: SparkSession, input_dir: str,
         timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
                      if ttl_ms is not None
                      else GroupStateTimeout.NoTimeout)))
-    return (flags.unionByName(short).writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return _parquet_sink(flags.unionByName(short),
+                         output_dir, checkpoint_dir)
 
 
 def neardup_keep_decisions(spark: SparkSession, flags_dir: str):
@@ -183,17 +197,14 @@ def neardup_keep_decisions(spark: SparkSession, flags_dir: str):
 
 
 def stream_extract(spark: SparkSession, input_dir: str,
-                   checkpoint_dir: str, output_dir: str,
-                   available_now: bool = True):
+                   checkpoint_dir: str, output_dir: str):
     """File-source stream of (url, html[, nbytes]) parquet -> extraction
     -> parquet sink. Exactly-once via the streaming checkpoint; resume
     is free (restart with the same checkpoint dir).
 
     Returns the StreamingQuery (already started)."""
-    src = (spark.readStream
-           .schema("url string, html binary, nbytes long")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
+    src = _file_source(spark, "url string, html binary, nbytes long",
+                       input_dir)
     # fan out each micro-batch across every core: the file-source
     # partitioning is maxFilesPerTrigger tasks, which strands the
     # other cores for the CPU-bound UDF (the batch path's perf lesson;
@@ -203,85 +214,45 @@ def stream_extract(spark: SparkSession, input_dir: str,
     extracted = (src.select("url", "html")
                  .repartition(par)
                  .mapInArrow(_extract_batches, _EXTRACT_DDL))
-    writer = (extracted.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(extracted, output_dir, checkpoint_dir)
 
 
 def stream_extract_html(spark: SparkSession, input_dir: str,
-                        checkpoint_dir: str, output_dir: str,
-                        available_now: bool = True):
+                        checkpoint_dir: str, output_dir: str):
     """Streaming twin of run.py --mode html: file-source stream of
     (url, html) web pages -> boilerplate strip -> parquet sink,
     exactly-once via the streaming checkpoint."""
     from .html_extract import extract_html
-    src = (spark.readStream
-           .schema("url string, html binary")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (extract_html(src).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    src = _file_source(spark, "url string, html binary", input_dir)
+    return _parquet_sink(extract_html(src), output_dir, checkpoint_dir)
 
 
 def stream_ingest_wet(spark: SparkSession, input_dir: str,
-                      checkpoint_dir: str, output_dir: str,
-                      available_now: bool = True):
+                      checkpoint_dir: str, output_dir: str):
     """Streaming twin of run.py --mode wet: file-source stream of
     (url, text) pre-extracted pages -> the oracled analytics
     annotation (job.annotate_wet's expression set; stateless, so no
     GroupState) -> parquet sink, exactly-once via the checkpoint."""
     from .job import annotate_wet
-    src = (spark.readStream
-           .schema("url string, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (annotate_wet(src).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    src = _file_source(spark, "url string, text string", input_dir)
+    return _parquet_sink(annotate_wet(src), output_dir, checkpoint_dir)
 
 
 def stream_ingest_wat(spark: SparkSession, input_dir: str,
-                      checkpoint_dir: str, output_dir: str,
-                      available_now: bool = True):
+                      checkpoint_dir: str, output_dir: str):
     """Streaming twin of run.py --mode wat: file-source stream of
     (url, metadata map, nbytes) crawl-metadata rows -> typed
     selection columns (job.annotate_wat's expression set; stateless)
     -> parquet sink, exactly-once via the checkpoint."""
     from .job import annotate_wat
-    src = (spark.readStream
-           .schema("url string, metadata map<string,string>, "
-                   "nbytes long")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (annotate_wat(src).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    src = _file_source(spark, "url string, metadata map<string,string>, "
+                       "nbytes long", input_dir)
+    return _parquet_sink(annotate_wat(src), output_dir, checkpoint_dir)
 
 
 def stream_quality_filter(spark: SparkSession, input_dir: str,
                           checkpoint_dir: str, output_dir: str,
-                          available_now: bool = True, **thresholds):
+                          **thresholds):
     """Streaming twin of run.py --mode filter: file-source stream of
     (url, text) docs -> per-doc keep decisions with reason tags
     (job.quality_decisions — stateless JVM expressions, no fan-out
@@ -289,23 +260,14 @@ def stream_quality_filter(spark: SparkSession, input_dir: str,
     via the checkpoint. `thresholds` pass through (min_words=...,
     langs=..., etc.)."""
     from .job import quality_decisions
-    src = (spark.readStream
-           .schema("url string, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (quality_decisions(src, **thresholds).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    src = _file_source(spark, "url string, text string", input_dir)
+    return _parquet_sink(quality_decisions(src, **thresholds),
+                         output_dir, checkpoint_dir)
 
 
 def stream_url_filter(spark: SparkSession, input_dir: str,
                       checkpoint_dir: str, output_dir: str,
-                      available_now: bool = True, **url_opts):
+                      **url_opts):
     """Streaming twin of run.py --mode urlfilter: file-source stream
     of docs -> per-URL keep decisions with reason tags
     (job.url_filter_decisions — row-local JVM exprs plus two
@@ -315,23 +277,14 @@ def stream_url_filter(spark: SparkSession, input_dir: str,
     etc.); a DataFrame blocklist must be a BATCH DataFrame (it is
     broadcast per micro-batch)."""
     from .job import url_filter_decisions
-    src = (spark.readStream
-           .schema("url string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (url_filter_decisions(src, **url_opts).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    src = _file_source(spark, "url string", input_dir)
+    return _parquet_sink(url_filter_decisions(src, **url_opts),
+                         output_dir, checkpoint_dir)
 
 
 def stream_mix(spark: SparkSession, input_dir: str,
                checkpoint_dir: str, output_dir: str,
-               available_now: bool = True, **mix_opts):
+               **mix_opts):
     """Streaming twin of run.py --mode mix: the decision is doc-local
     (a deterministic hash of the url), so the stateless map per
     micro-batch IS globally correct — same rationale as the urlfilter
@@ -347,25 +300,16 @@ def stream_mix(spark: SparkSession, input_dir: str,
         raise ValueError(f"key_col {key!r} not in {input_dir}")
     schema = ("url string" if key == "domain"
               else f"url string, {key} string")
-    src = (spark.readStream
-           .schema(schema)
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (mix_decisions(src, **mix_opts).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    src = _file_source(spark, schema, input_dir)
+    return _parquet_sink(mix_decisions(src, **mix_opts),
+                         output_dir, checkpoint_dir)
 
 
 def stream_shard_export(spark: SparkSession, input_dir: str,
                         checkpoint_dir: str, output_dir: str,
                         n_shards: int, seed: int = 0,
                         schema: str = "url string, text string",
-                        key_cols=("url",), available_now: bool = True):
+                        key_cols=("url",)):
     """Streaming twin of job.shard_export — continuous ingestion into
     training shard directories. Shard membership is a PURE ROW
     FUNCTION (pmod(xxhash64(keys, seed), n)), so the stateless map is
@@ -379,23 +323,13 @@ def stream_shard_export(spark: SparkSession, input_dir: str,
     if n_shards <= 0:
         raise ValueError("n_shards must be positive")
     keys = [F.col(c) for c in key_cols]
-    src = (spark.readStream
-           .schema(schema)
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
+    src = _file_source(spark, schema, input_dir)
     df = (src.withColumn("sort_key", F.xxhash64(*keys, F.lit(seed)))
           .withColumn("shard",
                       F.pmod(F.col("sort_key"), F.lit(n_shards))
                       .cast("int")))
-    writer = (df.writeStream
-              .format("parquet")
-              .partitionBy("shard")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(df, output_dir, checkpoint_dir,
+                         partition_by="shard")
 
 
 def stream_domain_cap(spark: SparkSession, input_dir: str,
@@ -443,11 +377,8 @@ def stream_domain_cap(spark: SparkSession, input_dir: str,
         if "text" not in spark.read.parquet(input_dir).columns:
             raise ValueError("max_tokens_per_domain needs a `text` "
                              f"column in {input_dir}")
-    src = (spark.readStream
-           .schema("url string, text string" if token_mode
-                   else "url string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
+    src = _file_source(spark, ("url string, text string" if token_mode
+                               else "url string"), input_dir)
     wcols = ([ws_tokens_expr().cast("long").alias("w")]
              if token_mode else [])
     m = (src.select(F.coalesce(F.col("url"), F.lit(""))
@@ -499,13 +430,7 @@ def stream_domain_cap(spark: SparkSession, input_dir: str,
                          else "cnt long"),
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout)
-    return (decided.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return _parquet_sink(decided, output_dir, checkpoint_dir)
 
 
 def _first_seen_state_fn(cols, ttl_ms):
@@ -596,10 +521,7 @@ def stream_line_dedup(spark: SparkSession, input_dir: str,
     from pyspark.sql.streaming.state import GroupStateTimeout
     from .queries import _WS_CHARS
 
-    src = (spark.readStream
-           .schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
+    src = _file_source(spark, "doc_id long, text string", input_dir)
     lines = src.select(
         "doc_id",
         F.posexplode(F.split(F.coalesce(F.col("text"), F.lit("")),
@@ -624,13 +546,7 @@ def stream_line_dedup(spark: SparkSession, input_dir: str,
                      else GroupStateTimeout.NoTimeout))
     out = blank.select("doc_id", "pos", "line", "kept") \
         .unionByName(decided)
-    return (out.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return _parquet_sink(out, output_dir, checkpoint_dir)
 
 
 def stream_substr_dedup(spark: SparkSession, input_dir: str,
@@ -664,10 +580,7 @@ def stream_substr_dedup(spark: SparkSession, input_dir: str,
     from pyspark.sql.streaming.state import GroupStateTimeout
     from .queries import GRAM_K, substr_gram_melt
 
-    src = (spark.readStream
-           .schema("doc_id long, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
+    src = _file_source(spark, "doc_id long, text string", input_dir)
     grams = substr_gram_melt(src, k or GRAM_K)
     ttl_ms = None if state_ttl_hours is None else \
         max(1, int(state_ttl_hours * 3600 * 1000))
@@ -679,42 +592,24 @@ def stream_substr_dedup(spark: SparkSession, input_dir: str,
         timeoutConf=(GroupStateTimeout.ProcessingTimeTimeout
                      if ttl_ms is not None
                      else GroupStateTimeout.NoTimeout))
-    return (decided.writeStream
-            .format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start())
+    return _parquet_sink(decided, output_dir, checkpoint_dir)
 
 
 def stream_pii_scrub(spark: SparkSession, input_dir: str,
-                     checkpoint_dir: str, output_dir: str,
-                     available_now: bool = True):
+                     checkpoint_dir: str, output_dir: str):
     """Streaming twin of run.py --mode pii: file-source stream of
     (url, text) docs -> PII-redacted text + per-category counters
     (job.pii_scrub_over — stateless JVM regexes, runs at scan speed,
     no fan-out needed) -> parquet sink, exactly-once via the
     checkpoint."""
     from .job import pii_scrub_over
-    src = (spark.readStream
-           .schema("url string, text string")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
-    writer = (pii_scrub_over(src).writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    src = _file_source(spark, "url string, text string", input_dir)
+    return _parquet_sink(pii_scrub_over(src), output_dir, checkpoint_dir)
 
 
 def stream_sigaudit(spark: SparkSession, input_dir: str,
                     checkpoint_dir: str, output_dir: str,
-                    trust_pems=None, crl_blobs=None, ocsp_ders=None,
-                    available_now: bool = True):
+                    trust_pems=None, crl_blobs=None, ocsp_ders=None):
     """Streaming twin of run.py --mode sigaudit: file-source stream
     of (url, html) documents -> per-signature audit rows
     (job.validate_signatures_over — trust/CRL/OCSP bytes snapshotted
@@ -724,22 +619,12 @@ def stream_sigaudit(spark: SparkSession, input_dir: str,
     micro-batch fans out across every core (the stream_extract
     lesson)."""
     from .job import validate_signatures_over
-    src = (spark.readStream
-           .schema("url string, html binary")
-           .option("maxFilesPerTrigger", 8)
-           .parquet(input_dir))
+    src = _file_source(spark, "url string, html binary", input_dir)
     par = spark.sparkContext.defaultParallelism
     audited = validate_signatures_over(
         src.repartition(par), trust_pems=trust_pems,
         crl_blobs=crl_blobs, ocsp_ders=ocsp_ders)
-    writer = (audited.writeStream
-              .format("parquet")
-              .option("path", output_dir)
-              .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _parquet_sink(audited, output_dir, checkpoint_dir)
 
 
 def stream_metrics(spark: SparkSession, input_dir: str,
@@ -757,9 +642,8 @@ def stream_metrics(spark: SparkSession, input_dir: str,
     watermark evict finalized windows; a sink consumer upserts by
     (window, status) — for the memory-sink demo that means taking the
     LAST emission per key."""
-    src = (spark.readStream
-           .schema("ts timestamp, status string, nbytes long")
-           .parquet(input_dir))
+    src = _file_source(spark, "ts timestamp, status string, nbytes long",
+                       input_dir, max_files_per_trigger=None)
     agg = (src.withWatermark("ts", watermark)
            .groupBy(F.window("ts", window).alias("w"), "status")
            .agg(F.count("*").alias("n_docs"),

@@ -761,7 +761,7 @@ def test_stream_ingest_wat(spark, tmp_path):
 def test_run_job_sigaudit_mode_resume(spark, tmp_path):
     """run.py --mode sigaudit (r6): corpus signature audit under the
     resume/metrics/run_id contract, with OCSP revocation material
-    shipped into executor closures via sig_material."""
+    shipped into executor closures via opts."""
     from pyspark.sql import functions as F
     from pdfio_spark.fixtures import (build_fixture, make_signed_pdf,
                                       test_trust_pems)
@@ -781,7 +781,7 @@ def test_run_job_sigaudit_mode_resume(spark, tmp_path):
     mat = {"trust_pems": [bytes(p) for p in test_trust_pems()],
            "ocsp_ders": [resp]}
     r1 = run_job(spark, inp, outp, met, mode="sigaudit", run_id="s1",
-                 sig_material=mat)
+                 opts=mat)
     assert r1["by_status"] == {"ok": 8, "nosig": 1, "error": 1}
     out = spark.read.parquet(outp)
     # the stapled OCSP response revokes every leaf signature
@@ -795,19 +795,20 @@ def test_run_job_sigaudit_mode_resume(spark, tmp_path):
     spark.createDataFrame(more, "url string, html binary") \
         .write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="sigaudit", resume=True,
-                 run_id="s2", sig_material=mat)
+                 run_id="s2", opts=mat)
     assert r2["written"] == 3
     m = spark.read.parquet(met)
     assert m.agg(F.sum("n_rows")).collect()[0][0] == 13
     assert m.agg(F.sum("n_revoked")).collect()[0][0] == 11
     assert m.agg(F.sum("n_nosig")).collect()[0][0] == 1
     assert m.agg(F.sum("n_error")).collect()[0][0] == 1
-    # typo'd sig_material key / wrong-mode material fail driver-side
+    # a typo'd material key and opts given to a mode that takes none
+    # (even {}) fail driver-side
     with pytest.raises(ValueError):
         run_job(spark, inp, outp, met, mode="sigaudit",
-                sig_material={"crls": [crl]})
-    with pytest.raises(ValueError):
-        run_job(spark, inp, outp, met, mode="pdf", sig_material={})
+                opts={"crls": [crl]})
+    with pytest.raises(ValueError, match="only valid"):
+        run_job(spark, inp, outp, met, mode="pdf", opts={})
 
 
 def test_stream_sigaudit(spark, tmp_path):
@@ -898,17 +899,15 @@ def test_quality_decisions_and_run_job_filter_mode(spark, tmp_path):
     assert m.agg(F.sum("n_kept")).collect()[0][0] == 2
     assert m.agg(F.sum("n_repetition")).collect()[0][0] == 1
     assert m.agg(F.sum("n_lang")).collect()[0][0] == 1
-    # filter_opts thresholds flow through run_job; typo'd keys and
-    # wrong-mode opts fail driver-side
+    # filter thresholds flow through run_job's opts; typo'd keys fail
+    # driver-side
     outp2 = str(tmp_path / "qf_out2")
     r3 = run_job(spark, inp, outp2, None, mode="filter", run_id="f3",
-                 filter_opts={"langs": ["en", "de"], "min_words": 1})
+                 opts={"langs": ["en", "de"], "min_words": 1})
     assert r3["by_status"] == {"kept": 4, "dropped": 1}
     with pytest.raises(ValueError):
         run_job(spark, inp, outp2, None, mode="filter",
-                filter_opts={"min_word": 1})
-    with pytest.raises(ValueError):
-        run_job(spark, inp, outp2, None, mode="pdf", filter_opts={})
+                opts={"min_word": 1})
 
 
 def test_pii_scrub_over_and_run_job_pii_mode(spark, tmp_path):
@@ -1043,24 +1042,22 @@ def test_url_filter_decisions_and_run_job_urlfilter_mode(spark,
     uo = {"blocked_domains": ["example.com", "news.co.uk"],
           "blocked_tokens": ["casino", "poker"]}
     r1 = run_job(spark, inp, outp, met, mode="urlfilter",
-                 run_id="u1", url_opts=uo)
+                 run_id="u1", opts=uo)
     assert r1["by_status"] == {"kept": 2, "dropped": 5}
     spark.createDataFrame([("https://late.example.com/y",)],
                           "url string") \
         .write.mode("append").parquet(inp)
     r2j = run_job(spark, inp, outp, met, mode="urlfilter",
-                  resume=True, run_id="u2", url_opts=uo)
+                  resume=True, run_id="u2", opts=uo)
     assert r2j["written"] == 1 and r2j["by_status"] == {"dropped": 1}
     m = spark.read.parquet(met)
     assert m.agg(F.sum("n_docs")).collect()[0][0] == 8
     assert m.agg(F.sum("n_kept")).collect()[0][0] == 2
     assert m.agg(F.sum("n_blocked_domain")).collect()[0][0] == 4
     # typo'd option key fails driver-side; opts rejected off-mode
-    with pytest.raises(ValueError, match="unknown url_opts"):
+    with pytest.raises(ValueError, match="unknown opts keys"):
         run_job(spark, inp, outp, met, mode="urlfilter",
-                url_opts={"blocked_domain": []})
-    with pytest.raises(ValueError, match="url_opts is only valid"):
-        run_job(spark, inp, outp, met, mode="pdf", url_opts={})
+                opts={"blocked_domain": []})
 
 
 def test_urldedup_decisions_and_run_job_mode(spark, tmp_path):
@@ -1217,23 +1214,21 @@ def test_mix_decisions_and_run_job_mix_mode(spark, tmp_path):
     df.filter("url is not null").write.parquet(inp)
     mo = {"weights": w}
     r1 = run_job(spark, inp, outp, met, mode="mix", run_id="m1",
-                 mix_opts=mo)
+                 opts=mo)
     assert r1["written"] == 91
     spark.createDataFrame([("https://late.plain.org/z",)],
                           "url string") \
         .write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="mix", resume=True,
-                 run_id="m2", mix_opts=mo)
+                 run_id="m2", opts=mo)
     assert r2["written"] == 1
     m = spark.read.parquet(met)
     assert m.agg(F.sum("n_docs")).collect()[0][0] == 92
     assert (m.agg(F.sum("n_copies_out")).collect()[0][0]
             == total + 1)
-    with pytest.raises(ValueError, match="unknown mix_opts"):
+    with pytest.raises(ValueError, match="unknown opts keys"):
         run_job(spark, inp, outp, met, mode="mix",
-                mix_opts={"weight": w})
-    with pytest.raises(ValueError, match="mix_opts is only valid"):
-        run_job(spark, inp, outp, met, mode="pdf", mix_opts={})
+                opts={"weight": w})
 
 
 def test_run_job_null_url_resume_idempotent(spark, tmp_path):
@@ -1269,10 +1264,10 @@ def test_run_job_null_url_resume_idempotent(spark, tmp_path):
     vdf.write.parquet(inp2)
     so = {"k": 2, "iters": 1, "tau": 0.99}
     rg1 = run_job(spark, inp2, outp2, met2, mode="semdedup",
-                  run_id="g1", semdedup_opts=so)
+                  run_id="g1", opts=so)
     assert rg1["written"] == 3
     rg2 = run_job(spark, inp2, outp2, met2, mode="semdedup",
-                  resume=True, run_id="g2", semdedup_opts=so)
+                  resume=True, run_id="g2", opts=so)
     assert rg2["written"] == 0
     out2 = spark.read.parquet(outp2)
     assert out2.count() == 3
@@ -1478,26 +1473,24 @@ def test_decontam_decisions_and_run_job_mode(spark, tmp_path):
     bdf.write.parquet(bp)
     do = {"benchmark_path": bp, "k": 5}
     r1 = run_job(spark, inp, outp, met, mode="decontam",
-                 run_id="dc1", decontam_opts=do)
+                 run_id="dc1", opts=do)
     assert r1["by_status"] == {"kept": 3, "dropped": 2}
     spark.createDataFrame(
         [("d://late", "the capital of france paris again here")],
         "url string, text string").write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="decontam",
-                 resume=True, run_id="dc2", decontam_opts=do)
+                 resume=True, run_id="dc2", opts=do)
     assert r2["written"] == 1 and r2["by_status"] == {"dropped": 1}
     m = spark.read.parquet(met)
     assert m.agg(F.sum("n_docs")).collect()[0][0] == 6
     assert m.agg(F.sum("n_contaminated")).collect()[0][0] == 3
     # option fail-fast: typo'd key, both/neither benchmark source
-    with pytest.raises(ValueError, match="unknown decontam_opts"):
+    with pytest.raises(ValueError, match="unknown opts keys"):
         run_job(spark, inp, outp, met, mode="decontam",
-                decontam_opts={"bench_path": bp})
+                opts={"bench_path": bp})
     with pytest.raises(ValueError, match="exactly one"):
         run_job(spark, inp, outp, met, mode="decontam",
-                decontam_opts={})
-    with pytest.raises(ValueError, match="decontam_opts is only"):
-        run_job(spark, inp, outp, met, mode="pdf", decontam_opts={})
+                opts={})
 
 
 def test_domain_cap_decisions_and_run_job_mode(spark, tmp_path):
@@ -1550,20 +1543,18 @@ def test_domain_cap_decisions_and_run_job_mode(spark, tmp_path):
     df.write.parquet(inp)
     r1 = run_job(spark, inp, outp, met, mode="domaincap",
                  run_id="cap1",
-                 domaincap_opts={"max_per_domain": CAP})
+                 opts={"max_per_domain": CAP})
     assert r1["by_status"] == {"kept": 6, "dropped": 8}
     spark.createDataFrame([("https://solo.example.net/y",)],
                           "url string") \
         .write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="domaincap",
                  resume=True, run_id="cap2",
-                 domaincap_opts={"max_per_domain": CAP})
+                 opts={"max_per_domain": CAP})
     assert r2["written"] == 1
-    with pytest.raises(ValueError, match="unknown domaincap_opts"):
+    with pytest.raises(ValueError, match="unknown opts keys"):
         run_job(spark, inp, outp, met, mode="domaincap",
-                domaincap_opts={"cap": 1})
-    with pytest.raises(ValueError, match="domaincap_opts is only"):
-        run_job(spark, inp, outp, met, mode="pdf", domaincap_opts={})
+                opts={"cap": 1})
 
 
 def test_domain_token_cap(spark, tmp_path):
@@ -1629,8 +1620,8 @@ def test_domain_token_cap(spark, tmp_path):
     df.write.parquet(inp)
     r1 = run_job(spark, inp, outp, met, mode="domaincap",
                  run_id="tc1",
-                 domaincap_opts={"max_per_domain": None,
-                                 "max_tokens_per_domain": BUDGET})
+                 opts={"max_per_domain": None,
+                       "max_tokens_per_domain": BUDGET})
     want_kept = sum(r.status == "kept" for r in out.values())
     assert r1["by_status"].get("kept") == want_kept
 
@@ -1654,21 +1645,24 @@ def test_corpus_global_resume_displacement_warns(spark, tmp_path):
     outp = str(tmp_path / "disp_out")
     spark.createDataFrame([(first,)], "url string").write.parquet(inp)
     r1 = run_job(spark, inp, outp, None, mode="domaincap",
-                 run_id="w1", domaincap_opts={"max_per_domain": 1})
+                 run_id="w1", opts={"max_per_domain": 1})
     assert r1["by_status"] == {"kept": 1}
-    # unchanged snapshot: clean crash-recovery resume stays silent
-    with _w.catch_warnings():
-        _w.simplefilter("error")
+    # unchanged snapshot: clean crash-recovery resume emits no
+    # UserWarning (recorded, not raised: an error filter would also
+    # turn pyspark's socket ResourceWarnings into unraisable errors)
+    with _w.catch_warnings(record=True) as caught:
+        _w.simplefilter("always", UserWarning)
         r2 = run_job(spark, inp, outp, None, mode="domaincap",
                      resume=True, run_id="w2",
-                     domaincap_opts={"max_per_domain": 1})
+                     opts={"max_per_domain": 1})
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
     assert r2["written"] == 0
     spark.createDataFrame([(second,)], "url string") \
         .write.mode("append").parquet(inp)
     with pytest.warns(UserWarning, match="diverge"):
         r3 = run_job(spark, inp, outp, None, mode="domaincap",
                      resume=True, run_id="w3",
-                     domaincap_opts={"max_per_domain": 1})
+                     opts={"max_per_domain": 1})
     assert r3["by_status"] == {"kept": 1}  # the documented violation
     out = spark.read.parquet(outp)
     assert out.filter("status = 'kept'").count() == 2
@@ -1676,7 +1670,7 @@ def test_corpus_global_resume_displacement_warns(spark, tmp_path):
     with pytest.warns(UserWarning, match="diverge"):
         r4 = run_job(spark, inp, outp, None, mode="domaincap",
                      resume=True, run_id="w4",
-                     domaincap_opts={"max_per_domain": 1})
+                     opts={"max_per_domain": 1})
     assert r4["written"] == 0
 
 
@@ -2084,7 +2078,7 @@ def test_run_job_semdedup_mode_crash_resume(spark, tmp_path):
     (semdedup_decisions(df, **so).limit(3)
      .withColumn("run_id", F.lit("s1")).write.parquet(outp))
     r = run_job(spark, inp, outp, met, resume=True, mode="semdedup",
-                run_id="s2", semdedup_opts=so)
+                run_id="s2", opts=so)
     assert r["written"] == 5
     out = spark.read.parquet(outp)
     assert out.count() == 8
@@ -2110,12 +2104,12 @@ def test_run_job_semdedup_mode_crash_resume(spark, tmp_path):
             == sum(1 for x in by_url.values() if x.is_kept))
     # opts hygiene: typo'd key and wrong-mode opts fail fast
     import pytest as _pytest
-    with _pytest.raises(ValueError, match="semdedup_opts"):
+    with _pytest.raises(ValueError, match="unknown opts keys"):
         run_job(spark, inp, outp, met, mode="semdedup",
-                semdedup_opts={"kk": 3})
+                opts={"kk": 3})
     with _pytest.raises(ValueError, match="only valid"):
         run_job(spark, inp, outp, met, mode="pdf",
-                semdedup_opts=so)
+                opts=so)
 
 
 def test_dedup_against_and_run_job_dedupref_mode(spark, tmp_path):
@@ -2180,14 +2174,14 @@ def test_dedup_against_and_run_job_dedupref_mode(spark, tmp_path):
     ref.write.parquet(refp)
     ro = {"reference_path": refp}
     r1 = run_job(spark, inp, outp, met, mode="dedupref", run_id="d1",
-                 dedupref_opts=ro)
+                 opts=ro)
     assert r1["by_status"] == {"kept": 2, "exact_dup": 1,
                                "near_dup": 1}
     spark.createDataFrame([("doc://e", other)],
                           "url string, text string") \
         .write.mode("append").parquet(inp)
     r2 = run_job(spark, inp, outp, met, mode="dedupref", resume=True,
-                 run_id="d2", dedupref_opts=ro)
+                 run_id="d2", opts=ro)
     assert r2["written"] == 1
     assert r2["by_status"] == {"exact_dup": 1}
     m = spark.read.parquet(met)
@@ -2195,18 +2189,15 @@ def test_dedup_against_and_run_job_dedupref_mode(spark, tmp_path):
     assert m.agg(F.sum("n_kept")).collect()[0][0] == 2
     with pytest.raises(ValueError, match="exactly one"):
         run_job(spark, inp, outp, met, mode="dedupref",
-                dedupref_opts={})
+                opts={})
     with pytest.raises(ValueError, match="exactly one"):
         run_job(spark, inp, outp, met, mode="dedupref",
-                dedupref_opts={"reference_path": refp,
-                               "index_path": ixp})
-    with pytest.raises(ValueError, match="only valid"):
-        run_job(spark, inp, outp, met, mode="pdf",
-                dedupref_opts=ro)
+                opts={"reference_path": refp,
+                      "index_path": ixp})
     # index-path mode through the contract too
     outp2, met2 = str(tmp_path / "dr_out2"), str(tmp_path / "dr_met2")
     rix = run_job(spark, inp, outp2, met2, mode="dedupref",
-                  run_id="d3", dedupref_opts={"index_path": ixp})
+                  run_id="d3", opts={"index_path": ixp})
     assert rix["by_status"] == {"kept": 2, "exact_dup": 2,
                                 "near_dup": 1}
     # index integrity (r6 review): an interrupted rebuild leaves the
@@ -2487,17 +2478,52 @@ def test_ivf_train_under_k_raises(spark):
         ann_ivf_over(emb.limit(5), k=16)
 
 
+def test_ivf_frozen_cell_warns(spark):
+    """A cell whose every member has a NULL qe element at one position
+    keeps its previous centroid, and the Lloyd pass warns about it.
+    Pass 1 moves cell 0 to [-99, 1], so in pass 2 vec 0 joins cell 1
+    and cell 0 holds only vec 2, whose NULL scores send it to the
+    lowest c_id."""
+    from pdfio_spark.pipeline.queries import _ivf_train_cells
+    t = spark.createDataFrame([(0, [1, 1]), (1, [0, 1]), (2, [-100, None])],
+                              "vec_id long, qe array<long>")
+    with pytest.warns(UserWarning, match="pass 2: 1 cell") as caught:
+        cells = _ivf_train_cells(t, k=2, iters=2)
+    assert not [w for w in caught if "pass 1" in str(w.message)]
+    assert cells == [(0, [-99, 1]), (1, [1, 2])]
+
+
 def test_cli_sig_flags_rejected_outside_sigaudit(spark, tmp_path):
-    """r6 review x2: `--mode pdf --crl-pems x.pem` used to drop the
-    revocation material silently (sig_material was only built for
-    --mode sigaudit); the CLI must hit run_job's mode guard."""
+    """`--mode pdf --crl-pems x.pem` used to drop the revocation
+    material silently; the CLI must reject it."""
     from pdfio_spark.pipeline.run import main
     pem = tmp_path / "crl.pem"
     pem.write_bytes(b"not really a crl")
-    with pytest.raises(ValueError, match="sig_material is only valid"):
+    with pytest.raises(ValueError, match="--crl-pems is only valid"):
         main(["--input", str(tmp_path / "in"),
               "--output", str(tmp_path / "out"),
               "--mode", "pdf", "--crl-pems", str(pem)])
+
+
+@pytest.mark.parametrize("mode,flag,value", [
+    ("pdf", "--filter-opts", "{}"),
+    ("pdf", "--crl-pems", "crl.pem"),
+    ("filter", "--url-opts", "{}")])
+def test_cli_mode_flag_rejected_before_session(tmp_path, monkeypatch,
+                                               mode, flag, value):
+    """A per-mode CLI flag under another --mode is never dropped
+    silently, and fails before a Spark session starts (or a flag's
+    file is read: crl.pem does not exist)."""
+    from pdfio_spark.pipeline import session
+    from pdfio_spark.pipeline.run import main
+
+    def no_session(*a, **kw):
+        raise AssertionError("get_spark ran before the flag check")
+    monkeypatch.setattr(session, "get_spark", no_session)
+    with pytest.raises(ValueError, match=f"{flag} is only valid"):
+        main(["--input", str(tmp_path / "in"),
+              "--output", str(tmp_path / "out"),
+              "--mode", mode, flag, value])
 
 
 def test_extract_pdfs_null_html_quarantined(spark):

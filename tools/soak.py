@@ -665,8 +665,8 @@ def main() -> None:
             F.concat(F.lit("doc://"), F.col("vec_id")).alias("url"),
             "embedding")
         _soak_run_job(spark, rows, "semdedup", mode, smj, soak_dir,
-                      semdedup_opts={"k": 256, "tau": 0.95,
-                                     "train_frac": 0.1})
+                      opts={"k": 256, "tau": 0.95,
+                            "train_frac": 0.1})
         return
 
     if mode == "dedup":
@@ -777,8 +777,8 @@ def main() -> None:
         # keeps ~half, so both decision paths and every reason
         # counter are exercised at 1M
         _soak_run_job(spark, docs, "filter", mode, smj, soak_dir,
-                      filter_opts={"min_words": 30,
-                                   "max_dup_word_frac": 0.55})
+                      opts={"min_words": 30,
+                            "max_dup_word_frac": 0.55})
         return
 
     if mode == "trainingprep":
@@ -928,8 +928,8 @@ def main() -> None:
         t0 = time.perf_counter()
         res = run_job(spark, inp, outp, met, mode="urlfilter",
                       run_id=f"soak-{mode}",
-                      url_opts={"blocked_domains": blocked,
-                                "blocked_tokens": ["casino"]})
+                      opts={"blocked_domains": blocked,
+                            "blocked_tokens": ["casino"]})
         dt = time.perf_counter() - t0
         print(json.dumps({"mode": mode, "n_docs": res["written"],
                           "by_status": res["by_status"],
@@ -963,7 +963,7 @@ def main() -> None:
         t0 = time.perf_counter()
         res = run_job(spark, inp, outp, met, mode="mix",
                       run_id=f"soak-{mode}",
-                      mix_opts={"weights": w})
+                      opts={"weights": w})
         dt = time.perf_counter() - t0
         bs = res["by_status"]
         want = n_docs // 10  # 100 of 1000 domains per class
@@ -1059,7 +1059,7 @@ def main() -> None:
         t0 = time.perf_counter()
         res = run_job(spark, inp, outp, met, mode="dedupref",
                       run_id=f"soak-{mode}",
-                      dedupref_opts={"reference_path": refp})
+                      opts={"reference_path": refp})
         dt = time.perf_counter() - t0
         bs = res["by_status"]
         # a near plant whose swapped last word collides with the
@@ -1157,7 +1157,7 @@ def main() -> None:
                 else {"max_per_domain": 1000})
         t0 = time.perf_counter()
         res = run_job(spark, inp, outp, met, mode="domaincap",
-                      run_id=f"soak-{mode}", domaincap_opts=opts)
+                      run_id=f"soak-{mode}", opts=opts)
         dt = time.perf_counter() - t0
         print(json.dumps({"mode": mode, "n_docs": res["written"],
                           "by_status": res["by_status"],
@@ -1195,7 +1195,7 @@ def main() -> None:
         t0 = time.perf_counter()
         res = run_job(spark, inp, outp, met, mode="decontam",
                       run_id=f"soak-{mode}",
-                      decontam_opts={"benchmark_path": bp})
+                      opts={"benchmark_path": bp})
         dt = time.perf_counter() - t0
         print(json.dumps({"mode": mode, "n_docs": n,
                           "by_status": res["by_status"],
